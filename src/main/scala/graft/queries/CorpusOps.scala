@@ -689,14 +689,13 @@ object CorpusOps {
     // `sel` must be BOUND, not inlined: higher-order functions evaluate
     // interpreted, with no common-subexpression elimination — two bare
     // array_contains(sel, _) references per position re-run the whole
-    // candidate scan n times (measured: 2× the solo floor). Wrapping
-    // the rebuild in transform(array(sel), ...) evaluates sel once per
-    // row and hands the lambda a bound variable.
-    val rebuilt = element_at(transform(array(sel), selv =>
+    // candidate scan n times (measured: 2× the solo floor). [[bind]]
+    // evaluates sel once per row and hands the lambda a bound variable.
+    val rebuilt = bind(sel)(selv =>
       flatten(transform(sequence(lit(1), n),
         i => when(array_contains(selv, i), array(lit(p1 + BpeSep + p2)))
           .when(array_contains(selv, i - 1), array().cast("array<string>"))
-          .otherwise(array(element_at(toks, i)))))), 1)
+          .otherwise(array(element_at(toks, i))))))
     // one-token docs (possible after an earlier merge) have no pairs —
     // and sequence(1, 0) would DESCEND, so the guard is load-bearing
     when(n >= 2, rebuilt).otherwise(toks)
@@ -1229,12 +1228,10 @@ object CorpusOps {
 
   /** q156's core against an explicit merge list, spec-drivable on hand
     * corpora (the bpeEncode factoring pattern). Each layer is BOUND via
-    * the element_at∘transform∘array trick before the next applies —
-    * [[graft.streaming.BpeEncoder]]'s no-CSE argument. */
+    * [[bind]] before the next applies — [[graft.streaming.BpeEncoder]]'s
+    * no-CSE argument. */
   private[graft] def bpeRoundTrip(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    def bind(c: Column)(f: Column => Column): Column =
-      element_at(transform(array(c), f), 1)
     val toks0 = filter(split(coalesce(col("text"), lit("")), " "),
       x => x =!= "")
     val report = bind(toks0) { t0 =>
@@ -1309,6 +1306,13 @@ object CorpusOps {
     * used through r15 (two corpus-keyed exchange families → zero; the
     * map-only q139/q165 class, one O(n log n) row-local sort per doc
     * instead of hashing every bigram slot through two aggregates).
+    * The sorted bigram array is BOUND ([[bind]]) before the run fold
+    * reads it: the fold reads its array 2(n−1) times, and an inlined
+    * `array_sort(…)` argument re-sorted the whole array on every read
+    * (interpreted HOF bodies get no common-subexpression elimination),
+    * which made the profile O(n² log n) per doc (full result on the
+    * 500-doc sf0.01 corpus, local[4] on a 4-core host: 19.1 s inlined,
+    * 1.7 s bound). PlanSpec's loop-invariance guard pins the bound form.
     * FULLY ORACLED: DuckDB mirrors the run lengths via
     * gaps-and-islands (q138's recipe) and the bigram mode via lead +
     * two GROUP BYs — the oracle is unchanged, only the engine's plan
@@ -1333,12 +1337,10 @@ object CorpusOps {
     // descending-sequence landmine off short docs (q64's gotcha —
     // CaseWhen evaluates only the selected branch) and makes the
     // short-doc arm a literal 0 instead of a unioned second scan.
-    val bgArr = array_sort(transform(sequence(lit(1), size(col("toks")) - 1),
-      i => struct(element_at(col("toks"), i).as("t1"),
-        element_at(col("toks"), i + 1).as("t2"))))
     val top = stats.select(col("doc_id"), col("n_tok"), col("n_dist"),
       col("max_run"),
-      when(col("n_tok") >= 2, maxRun(bgArr)).otherwise(lit(0L)).as("top_c"))
+      when(col("n_tok") >= 2, bind(sortedBigrams(col("toks")))(maxRun))
+        .otherwise(lit(0L)).as("top_c"))
     top.select(col("doc_id"), col("n_tok"),
       round(when(col("n_tok") > 0,
         lit(1.0) - col("n_dist").cast("double") / col("n_tok").cast("double"))
@@ -1349,6 +1351,14 @@ object CorpusOps {
         .otherwise(lit(0.0)), 6).as("top_bigram_frac"))
   }
 
+  /** A token array's adjacent-pair slots as (t1, t2) structs, sorted —
+    * equal bigrams end up adjacent. Needs n >= 2 (sequence(1, n − 1)
+    * would DESCEND below that). */
+  private[graft] def sortedBigrams(toks: Column): Column =
+    array_sort(transform(sequence(lit(1), size(toks) - 1),
+      i => struct(element_at(toks, i).as("t1"),
+        element_at(toks, i + 1).as("t2"))))
+
   /** Longest run of equal ADJACENT elements — an O(n) fold with a
     * two-field bound accumulator (run, best); the CaseWhen guards keep
     * the fold off sub-2-element arrays (sequence(2, n) would DESCEND
@@ -1356,8 +1366,11 @@ object CorpusOps {
     * type with SQL equality (q151 runs it on token strings for the
     * repeat-run signal AND on sorted bigram structs, where the longest
     * equal-adjacent run of a sorted array is the multiset mode's
-    * multiplicity). */
-  private def maxRun(toks: Column): Column = {
+    * multiplicity). `toks` MUST be an attribute or a bound lambda
+    * variable ([[bind]]): the fold reads it 2(n−1) times inside its
+    * lambda, and an expression passed here is re-evaluated on every
+    * read, so the fold is O(n) only when its argument is. */
+  private[graft] def maxRun(toks: Column): Column = {
     val n = size(toks)
     val folded = aggregate(sequence(lit(2), n),
       struct(lit(1L).as("run"), lit(1L).as("best")),

@@ -68,6 +68,12 @@ package object queries {
   def orderAll(df: DataFrame): DataFrame =
     df.orderBy(df.columns.map(c => col(c).asc_nulls_first).toIndexedSeq: _*)
 
+  /** Evaluate `c` once per row and hand it to `f` as a bound lambda
+    * variable: higher-order-function bodies get no common-subexpression
+    * elimination, so an expression a lambda reads re-runs per call. */
+  def bind(c: Column)(f: Column => Column): Column =
+    element_at(transform(array(c), f), 1)
+
   /** The Knuth multiplicative hash family behind every deterministic
     * bucket/split/shard/sample/priority in the surface (q72, q94/q95,
     * q99, q132, q133/q138's split, q136's shard, q137/s94's priority,

@@ -165,9 +165,10 @@ object ScaleProbe {
     // top of q149's learn+encode — its wall must track q149's, and
     // superlinearity would mean the report stopped riding one scan
     "q150_encode_by_lang",
-    // q151's stats are row-local (array_distinct + the max-run fold)
-    // and its bigram rollups shrink per doc — superlinearity means the
-    // fold stopped being O(n) or a rollup stopped partial-aggregating
+    // q151 is row-local (array_distinct, the max-run fold, the sorted
+    // bigram array) — wall must track the scan. This probe cannot see a
+    // per-doc superlinear fold: salted copies multiply docs, not their
+    // length. PlanSpec's loop-invariance guard catches that class.
     "q151_repetition_profile",
     // q152 is two row-local score folds into a <=4-group rollup (the
     // q147/q139 map-only class plus one shrinking exchange)

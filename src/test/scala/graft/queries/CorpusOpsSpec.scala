@@ -662,4 +662,47 @@ class CorpusOpsSpec extends SparkSpec {
       (5L, 4L, 0.75, 4L, 1.0)),
       s"profile diverged:\n${got.mkString("\n")}")
   }
+
+  test("property: q151's profile equals a plain-Scala reference on run- and repeat-heavy docs") {
+    // 0-400 tokens over a 5-word vocabulary, drawn as runs of 1-8 copies
+    // so long runs and repeated bigrams are the common case; a doubled
+    // space now and then exercises the empty-token filter
+    import org.scalacheck.Gen
+    val run = for {
+      w <- Gen.oneOf("a", "b", "c", "d", "e")
+      k <- Gen.frequency(3 -> Gen.const(1), 2 -> Gen.choose(2, 8))
+    } yield Seq.fill(k)(w)
+    val doc = for {
+      n <- Gen.frequency(1 -> Gen.choose(0, 2), 4 -> Gen.choose(3, 400))
+      toks <- Gen.listOfN(n, run).map(_.flatten.take(n))
+      seps <- Gen.listOfN(toks.size, Gen.frequency(9 -> " ", 1 -> "  "))
+    } yield toks.zip(seps).map { case (t, sep) => t + sep }.mkString
+    def round6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def longestRun(xs: Seq[String]): Long =
+      if (xs.isEmpty) 0L
+      else xs.zip(xs.tail).scanLeft(1L) { case (r, (p, q)) =>
+        if (p == q) r + 1 else 1L }.max
+    def reference(text: String): (Long, Double, Long, Double) = {
+      val toks = text.split(" ").filter(_.nonEmpty).toSeq
+      val n = toks.size
+      val bigrams = toks.zip(toks.drop(1))
+      val top = if (bigrams.isEmpty) 0 else bigrams.groupBy(identity).values.map(_.size).max
+      (n.toLong,
+        if (n > 0) round6(1.0 - toks.distinct.size.toDouble / n) else 0.0,
+        longestRun(toks),
+        if (n >= 2) round6(top.toDouble / (n - 1)) else 0.0)
+    }
+    val prop = org.scalacheck.Prop.forAll(Gen.listOfN(40, doc)) { texts =>
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val got = CorpusOps.repetitionProfile(docs).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getLong(3),
+          r.getDouble(4))).toMap
+      texts.indices.forall(i => got(i.toLong) == reference(texts(i)))
+    }
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(25), prop)
+    assert(res.passed, res.status.toString)
+  }
 }

@@ -1,5 +1,14 @@
 package graft.queries
 
+import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ArraySort,
+  Expression, HigherOrderFunction, LambdaFunction, NamedLambdaVariable,
+  SortArray, StringSplit}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.functions.{col, split}
+
 import graft.SparkSpec
 
 /** Golden physical-plan assertions (SURVEY.md §4.2): the optimizations we
@@ -12,6 +21,50 @@ class PlanSpec extends SparkSpec {
 
   private def plan(name: String): String =
     graft.SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** Loop-invariant work inside higher-order-function lambdas, as SQL:
+    * every maximal non-foldable subtree of a lambda body that reads no
+    * variable of an enclosing lambda and contains a higher-order
+    * function, an array sort, an array_distinct or a split. Lambda
+    * bodies evaluate interpreted with no common-subexpression
+    * elimination, so such a subtree re-runs on every lambda call —
+    * q151's inlined bigram sort re-sorted the doc's whole bigram array
+    * per fold step, O(n² log n) per doc. The fix is to bind the value
+    * ([[graft.queries.bind]]) or project it first. Walks subqueries and
+    * the physical plans behind cache reads, since a cached frame's
+    * projections never show in the reading plan. */
+  private def invariantLambdaWork(p: LogicalPlan): Seq[String] =
+    p.collectWithSubqueries {
+      case r: InMemoryRelation => invariantLambdaWork(r.cacheBuilder.cachedPlan)
+      case node => node.expressions.flatMap(invariantIn(_, inLambda = false))
+    }.flatten.distinct
+
+  private def invariantLambdaWork(p: SparkPlan): Seq[String] =
+    p.collectWithSubqueries {
+      case a: AdaptiveSparkPlanExec => invariantLambdaWork(a.executedPlan)
+      case s: InMemoryTableScanExec =>
+        invariantLambdaWork(s.relation.cacheBuilder.cachedPlan)
+      case node => node.expressions.flatMap(invariantIn(_, inLambda = false))
+    }.flatten
+
+  private def invariantIn(e: Expression, inLambda: Boolean): Seq[String] = {
+    def costly = e.exists {
+      case _: HigherOrderFunction | _: ArraySort | _: SortArray |
+          _: StringSplit | _: ArrayDistinct => true
+      case _ => false
+    }
+    // no free lambda variable: every one it reads is bound inside it
+    def closed = {
+      val bound = e.collect { case f: LambdaFunction => f.arguments.map(_.exprId) }
+        .flatten.toSet
+      e.collect { case v: NamedLambdaVariable => v.exprId }.forall(bound)
+    }
+    e match {
+      case f: LambdaFunction => invariantIn(f.function, inLambda = true)
+      case _ if inLambda && !e.foldable && closed && costly => Seq(e.sql)
+      case _ => e.children.flatMap(invariantIn(_, inLambda))
+    }
+  }
 
   test("q02: parquet scan prunes to the projected columns") {
     val p = plan("q02_scan_parquet")
@@ -1285,6 +1338,38 @@ class PlanSpec extends SparkSpec {
           s"HOF inlining returned:\n" +
           df.queryExecution.executedPlan.toString.take(2000))
     }
+  }
+
+  test("no declared query re-runs loop-invariant array work inside a HOF lambda") {
+    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, q) =>
+        val found = invariantLambdaWork(q(spark, sf).queryExecution.optimizedPlan)
+        graft.core.CacheScope.drain()
+        found.map(sql => s"$name: $sql")
+    }
+    assert(offenders.isEmpty,
+      s"loop-invariant array work inside a lambda:\n${offenders.mkString("\n")}")
+  }
+
+  test("the loop-invariance guard flags q151's unbound bigram fold, not the bound one") {
+    // the pre-fix q151 spelling passed the sorted bigram array straight
+    // into the run fold; binding it first is the fix
+    val toks = spark.read.parquet(s"$sf/documents.parquet")
+      .select(split(col("text"), " ").as("toks"))
+    val bigrams = CorpusOps.sortedBigrams(col("toks"))
+    val inlined = invariantLambdaWork(
+      toks.select(CorpusOps.maxRun(bigrams)).queryExecution.optimizedPlan)
+    assert(inlined.nonEmpty && inlined.forall(_.contains("array_sort")),
+      s"guard missed the inlined sort: $inlined")
+    val bound = invariantLambdaWork(toks.select(
+      bind(bigrams)(CorpusOps.maxRun)).queryExecution.optimizedPlan)
+    assert(bound.isEmpty, s"guard flags the bound spelling: $bound")
+    // a cached frame's projections only show behind the cache read
+    val cached = toks.select(CorpusOps.maxRun(bigrams).as("r")).cache()
+    try assert(invariantLambdaWork(
+      cached.select(col("r") + 1).queryExecution.optimizedPlan).nonEmpty,
+      "guard does not see through a cache read")
+    finally cached.unpersist()
   }
 
   test("whole-stage codegen covers the hot aggregation path") {
